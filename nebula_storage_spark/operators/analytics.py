@@ -394,8 +394,8 @@ def connected_components_doubling_oracle_sql(edges_sql: str,
 
 def maximal_independent_set(edges: DataFrame, rounds: int = 4,
                             prefix: str = "mis#",
-                            broadcast_max_nodes: int | None = None,
-                            counter: bool = False) -> DataFrame:
+                            broadcast_max_nodes: int | None = None
+                            ) -> DataFrame:
     """Luby's maximal-independent-set algorithm with DETERMINISTIC
     priorities: md5(node) replaces the per-round RNG draw, ties broken
     by node id, so the selected set is reproducible on any engine (the
@@ -417,6 +417,11 @@ def maximal_independent_set(edges: DataFrame, rounds: int = 4,
     size-gated broadcast: below the gate the persisted edge frame never
     shuffles inside a round; above it the joins fall back to shuffled —
     the only feasible plan at 10⁹ vertices.
+
+    greedy_coloring's beating-neighbour counter does not pay here
+    (measured at sf0.1, 4 rounds: 11.3 s against this loop's 9.59 s):
+    most of the graph leaves MIS in round 1 as winners' fallout, so the
+    counter's decrement pass re-scans nearly every edge once more.
     """
     a, b = F.col(SRC), F.col(DST)
     und = (edges.filter(a != b)
@@ -433,74 +438,6 @@ def maximal_independent_set(edges: DataFrame, rounds: int = 4,
     # (same r13 rationale as greedy_coloring's u/act)
     u = (both.select(F.col(SRC).alias("node")).distinct()
          .withColumn("h", F.expr(pri)).transform(_pin))
-    if counter:
-        # COUNTER arm (r13, NOT the default — a measured negative kept
-        # for the A/B record): greedy_coloring's nhp fusion applied to
-        # Luby selection — u4(node, nhp) tracks the count of
-        # still-active beating neighbours ((h_w, w) > (h_u, u), larger
-        # wins in MIS), winner selection is filter(nhp = 0). Measured
-        # at the sf0.1 gate config (co-order pairs, 4 rounds,
-        # best-of-3 warm): 11.3 s vs legacy 9.59 s. Why it loses here
-        # but wins in coloring: in MIS the leaving set per round is
-        # win ∪ FALLOUT — most of the graph leaves in round 1 — so the
-        # decrement delta plus the up-front nhp0 aggregation re-scan
-        # nearly the whole edge set once more, while the legacy arm's
-        # frontier-restricted eu joins shrink just as fast without
-        # that extra pass. In coloring only winners leave (geometric,
-        # slower), which is what makes the delta bounded AND the act
-        # restriction worth deleting. Bit-identical to the legacy arm
-        # (same winner predicate, same fallout definition), pinned by
-        # the parity test.
-        ha = f"CAST(conv(substring(md5(concat('{prefix}', " \
-             f"CAST({SRC} AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-        hb = f"CAST(conv(substring(md5(concat('{prefix}', " \
-             f"CAST({DST} AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-        beat = ((F.col("hb") > F.col("ha"))
-                | ((F.col("hb") == F.col("ha"))
-                   & (F.col(DST) > F.col(SRC))))
-        act = (both.withColumn("ha", F.expr(ha))
-               .withColumn("hb", F.expr(hb)).localCheckpoint())
-        nhp0 = (act.filter(beat)
-                .groupBy(F.col(SRC).alias("node"))
-                .agg(F.count(F.lit(1)).alias("nhp")))
-        u4 = (u.select("node").join(nhp0, "node", "left")
-              .select("node", F.coalesce("nhp", F.lit(0)).alias("nhp"))
-              .localCheckpoint())
-        winners, outs = None, None
-        for t in range(rounds):
-            hint = _round_hint(u4.count(), broadcast_max_nodes)
-            win = (u4.filter(F.col("nhp") == 0).select("node")
-                   .localCheckpoint())
-            out = (both.join(hint(win.withColumnRenamed("node", SRC)),
-                             SRC)
-                   .select(F.col(DST).alias("node")).distinct()
-                   .join(hint(u4.select("node")), "node", "left_semi")
-                   .localCheckpoint())
-            winners = win if winners is None else winners.union(win)
-            outs = out if outs is None else outs.union(out)
-            if t + 1 < rounds:
-                leave = win.union(out)
-                delta = (act.join(hint(leave.withColumnRenamed(
-                    "node", DST)), DST)
-                    .groupBy(F.col(SRC).alias("node"))
-                    .agg(F.sum(F.when(beat, 1).otherwise(0))
-                         .alias("dc")))
-                u4 = (u4.filter(F.col("nhp") > 0)
-                      .join(hint(out), "node", "left_anti")
-                      .join(delta, "node", "left")
-                      .select("node",
-                              F.expr("nhp - coalesce(dc, CAST(0 AS "
-                                     "BIGINT))").alias("nhp"))
-                      .localCheckpoint())
-        nodes = both.select(F.col(SRC).alias("node")).distinct()
-        return (nodes
-                .join(winners.withColumn("_in", F.lit(1)).distinct(),
-                      "node", "left")
-                .join(outs.withColumn("_out", F.lit(1)).distinct(),
-                      "node", "left")
-                .select("node", F.when(F.col("_in").isNotNull(), "in")
-                        .when(F.col("_out").isNotNull(), "out")
-                        .otherwise("undecided").alias("status")))
     winners, outs = None, None
     for _ in range(rounds):
         hint = _round_hint(u.count(), broadcast_max_nodes)
@@ -753,13 +690,6 @@ def sssp_parents_oracle_sql(edges_sql: str, source: int,
             + f"\nSELECT node, dist, parent FROM d{iterations}")
 
 
-def _enumerate_triangles(edges: DataFrame,
-                         broadcast_max_edges: int | None = None) -> DataFrame:
-    """See _enumerate_triangles_ex; kept as the (tri-only) public shape."""
-    tri, _ = _enumerate_triangles_ex(edges, broadcast_max_edges)
-    return tri
-
-
 def _enumerate_triangles_ex(edges: DataFrame,
                             broadcast_max_edges: int | None = None
                             ) -> tuple[DataFrame, bool]:
@@ -807,14 +737,18 @@ def _enumerate_triangles_ex(edges: DataFrame,
     ).transform(_pin)
     limit = TRIANGLE_BROADCAST_MAX_EDGES if broadcast_max_edges is None \
         else broadcast_max_edges
-    n_edges, max_id = o.agg(
-        F.count(F.lit(1)), F.max(F.greatest("src", "dst"))).first()
+    n_edges, min_id, max_id = o.agg(
+        F.count(F.lit(1)), F.min(F.least("src", "dst")),
+        F.max(F.greatest("src", "dst"))).first()
     hint = F.broadcast if n_edges <= limit else (lambda df: df)
-    # Pack the closure key (v, w) into one BIGINT when ids fit 31 bits:
-    # a single-long join key builds/probes as a LongHashedRelation —
-    # ~3x faster than the UnsafeRow composite-key relation, which is
-    # most of the closure join's cost once the wedge stream pipelines.
-    packable = max_id is not None and max_id < (1 << 31)
+    # Pack the closure key (v, w) into one BIGINT when ids are in
+    # [0, 2^31): a single-long join key builds/probes as a
+    # LongHashedRelation — ~3x faster than the UnsafeRow composite-key
+    # relation, which is most of the closure join's cost once the wedge
+    # stream pipelines. Negative ids stay unpacked: triangle_edge_support
+    # unpacks with DIV and %, which truncate toward zero.
+    packable = (max_id is not None and min_id >= 0
+                and max_id < (1 << 31))
     shift = F.lit(1 << 32).cast("long")
     e1 = o.alias("e1")
     e2 = hint(o.select(F.col("src").alias("w_src"),
@@ -845,8 +779,8 @@ def triangle_counts(edges: DataFrame,
                     broadcast_max_edges: int | None = None) -> DataFrame:
     """Per-vertex triangle participation counts. Output:
     (node, n_triangles), nodes in ≥1 triangle only. Enumeration plan and
-    100 TB posture: see `_enumerate_triangles`."""
-    tri = _enumerate_triangles(edges, broadcast_max_edges)
+    100 TB posture: see `_enumerate_triangles_ex`."""
+    tri, _ = _enumerate_triangles_ex(edges, broadcast_max_edges)
     return (tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
             .groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles")))
 
@@ -865,14 +799,14 @@ def triangle_edge_support(edges: DataFrame,
     on the canonical (least, greatest) pair — same skew bound as the
     enumeration itself (O(sqrt(|E|)) oriented fanout), no extra joins.
 
-    When ids fit 31 bits (the same `packable` probe the closure join
-    uses) the aggregation key is the pair PACKED into one BIGINT
+    When ids are in [0, 2^31) (the same `packable` probe the closure
+    join uses) the aggregation key is the pair PACKED into one BIGINT
     (least·2^32 + greatest, unpacked after the aggregate): the explode
     stream carries 8 key bytes/row instead of 16 and the hash aggregate
     builds a single-long relation instead of an UnsafeRow composite —
     this aggregation's exchange is the largest shuffle in the triangle
     family (guide §2.3, r13 verdict Next #3). Bit-identical by
-    injectivity of the pack on 31-bit ids."""
+    injectivity of the pack on non-negative 31-bit ids."""
     tri, packable = _enumerate_triangles_ex(edges, broadcast_max_edges)
     if packable:
         shift = F.lit(1 << 32).cast("long")
@@ -1185,10 +1119,20 @@ def scc_components(edges: DataFrame, rounds: int = 8) -> DataFrame:
             .groupBy("node").agg(F.min("peer").alias("scc_id")))
 
 
+# _min_label_fixpoint truncates its plan with localCheckpoint on every
+# this-many-th round. MEASURED under a bit-identity gate on the
+# end-to-end scc loop: 2 against the previous 4 reads 13.7 vs 19.0 s at
+# 1× and 19.2 vs 21.2 s at 10× — the per-round frames are only |V|
+# rows, so the checkpoint upload is cheap while the analysis cost of
+# deeper persist-chains is not; 8 did not complete 1× within 15 minutes
+# (driver pegged in Catalyst analysis of the 7-round lineage), the
+# pathology this truncation bounds.
+FIXPOINT_CHECKPOINT_EVERY = 2
+
+
 def _min_label_fixpoint(e: DataFrame, nodes: DataFrame,
                         max_rounds: int = 16,
-                        loop_parts: int | None = None,
-                        ckpt_cadence: int = 2) -> DataFrame:
+                        loop_parts: int | None = None) -> DataFrame:
     """Forward min-label propagation (labels flow along src→dst) with
     POINTER DOUBLING, run to fixpoint: returns (node, label) with
     label(v) = min({v} ∪ {u : u →* v in e}). The label-of-label hop is
@@ -1203,27 +1147,14 @@ def _min_label_fixpoint(e: DataFrame, nodes: DataFrame,
     includes the old label), so Σlabel is strictly monotone: the
     fixpoint is reached exactly when Σlabel stops falling. The sum runs
     in DECIMAL(38,0) so 10^10 nodes × 10^9 ids can't overflow int64.
-    Plans are truncated with localCheckpoint every `ckpt_cadence`
-    rounds instead of every round (lineage depth between truncations is
-    bounded and the per-round frames are cached, so there is no O(K²)
-    re-evaluation). The default cadence 2 is MEASURED, not assumed
-    (tools/coloring_cadence.py, bit-identity-gated, r10 verdict Next
-    #6): vs the previous 4 it reads 13.7 vs 19.0 s at 1× and 19.2 vs
-    21.2 s at 10× on the end-to-end scc loop — the per-round frames
-    are only |V| rows, so the checkpoint upload is cheap while the
-    analysis cost of deeper persist-chains is not; cadence 8 did not
-    complete 1× within 15 minutes (driver pegged in Catalyst analysis
-    of the 7-round lineage), the pathology this truncation bounds.
-    Raises if max_rounds is exhausted while Σlabel is still falling
-    (2^max_rounds reach — silently returning unconverged labels would
-    let scc_coloring split an SCC, r4 advice).
+    Plans are truncated with localCheckpoint every
+    FIXPOINT_CHECKPOINT_EVERY rounds instead of every round (lineage
+    depth between truncations is bounded and the per-round frames are
+    cached, so there is no O(K²) re-evaluation). Raises if max_rounds
+    is exhausted while Σlabel is still falling (2^max_rounds reach —
+    silently returning unconverged labels would let scc_coloring split
+    an SCC, r4 advice).
     """
-    if ckpt_cadence < 1:
-        raise ValueError(
-            f"ckpt_cadence must be >= 1, got {ckpt_cadence} — 0 would "
-            "divide by zero mid-loop and a negative cadence silently "
-            "disables lineage truncation")
-
     def narrow(df: DataFrame) -> DataFrame:
         # size-gated: a frontier that fits one task runs as one task —
         # 32-wide stages on a few thousand rows are pure scheduler
@@ -1268,7 +1199,7 @@ def _min_label_fixpoint(e: DataFrame, nodes: DataFrame,
             # over a NONEMPTY frame (non-numeric ids cast to NULL, or
             # decimal overflow) would otherwise compare None == None and
             # silently declare convergence after one round with wrong labels
-            if (r + 1) % ckpt_cadence == 0:
+            if (r + 1) % FIXPOINT_CHECKPOINT_EVERY == 0:
                 # checkpoint rounds: ride Σ/count on the SAME job that
                 # materializes the checkpoint via observe() — the
                 # separate post-checkpoint agg was one whole extra
@@ -1394,8 +1325,7 @@ def _tarjan_scc(edge_list: list[tuple[int, int]]) -> dict[int, int]:
 
 def scc_coloring(edges: DataFrame, max_outer: int = 64,
                  max_rounds: int = 16,
-                 driver_tail_edges: int = 50_000,
-                 fixpoint_ckpt_cadence: int = 2) -> DataFrame:
+                 driver_tail_edges: int = 50_000) -> DataFrame:
     """Whole-graph strongly connected components via the COLORING
     algorithm over the pointer-doubling primitive — the scale-safe
     replacement for scc_components' transitive-closure route on
@@ -1532,8 +1462,7 @@ def scc_coloring(edges: DataFrame, max_outer: int = 64,
             cur = cur.localCheckpoint()  # pin before the fixpoints
             # 2. color
             colors = _min_label_fixpoint(cur, remaining, max_rounds,
-                                         loop_parts,
-                                         fixpoint_ckpt_cadence)
+                                         loop_parts)
             # 3. peel: min descendant within the color class, via the
             # same doubling on reversed same-color edges
             lsrc = colors.select(F.col("node").alias(SRC),
@@ -1548,8 +1477,7 @@ def scc_coloring(edges: DataFrame, max_outer: int = 64,
                 .persist())
             cached.append(same_rev)
             desc = _min_label_fixpoint(same_rev, remaining, max_rounds,
-                                       loop_parts,
-                                       fixpoint_ckpt_cadence)
+                                       loop_parts)
             member = (narrow(
                 colors.join(desc.withColumnRenamed("label", "mdesc"),
                             "node")
@@ -1819,13 +1747,8 @@ def hits_oracle_sql(edges_sql: str, iterations: int = 3,
             f"JOIN h{iterations} USING (node)")
 
 
-CKPT_PERSIST_MIN_NODES = 500_000
-
-
 def greedy_coloring(edges: DataFrame, rounds: int = 3,
-                    prefix: str = "col#",
-                    ckpt_every: int | None = None,
-                    fused: bool | str = "counter") -> DataFrame:
+                    prefix: str = "col#") -> DataFrame:
     """Jones-Plassmann parallel greedy coloring with deterministic Luby
     priorities: per round, every uncolored node whose md5 priority
     (ties by id) beats all uncolored neighbours takes the smallest
@@ -1833,46 +1756,29 @@ def greedy_coloring(edges: DataFrame, rounds: int = 3,
     by the round number, so it folds to a bitmask CASE). K rounds
     color the bulk of the graph (same geometric-decay argument as
     maximal_independent_set above); the rest report color -1
-    ('undecided'), making the round budget explicit.
-
-    Scale: per round = the MIS winner selection (hash joins on the
-    node key) plus one aggregation of neighbour colors into a bitmask;
-    the uncolored frontier shrinks geometrically and is
-    localCheckpoint()ed on every `ckpt_every`-th round (registry-pinned
-    persist() between — materialization without the checkpoint's block
-    upload, lineage depth bounded by the cadence).
-
-    `fused="counter"` (default since r13, MEASURED via
-    tools/coloring_cadence.py under its bit-identity gate) goes one
-    fusion step past the r12 mask arm: the state u3(node, used, nhp)
-    additionally tracks the COUNT of still-active beating neighbours,
-    decremented by the same delta aggregation that maintains the used
-    mask — winner selection collapses to filter(nhp = 0), winner
-    removal to filter(nhp > 0), and the per-round act restriction
-    (two anti-joins + one checkpointed frame) disappears. Measured vs
-    the r12 fused arm: 165 k nodes 5.91 vs 6.50 s; 1.65 M 12.47 vs
-    16.25 s (bit-identical; counter-arm checkpoint cadences 1/2/3 are
-    within noise at rounds=3, so the uniform cadence 1 stays).
-
-    `fused=True` is the r12 incremental-used-mask arm (u2(node,
-    used): winner selection and mex in one pass, neighbour-color
-    delta joined against only the newly-colored winners, frontier
-    restriction by anti-join). Measured: 165 k nodes 6.26 s vs
-    legacy-shipping 7.81 s; 1.65 M nodes 15.36 s vs 25.11 s. The
-    legacy path (fused=False) keeps its measured |V| size gate —
-    per-round truncation wins ≤ 500 k nodes (8.3 vs 9.7 s at 165 k),
-    the upload loses 3.3× at 1.65 M (73.3 vs 22.1 s) so cadence
-    min(rounds, 3) above. Both stay for the harness A/B. Output:
+    ('undecided'), making the round budget explicit. Output:
     (node, color).
-    """
-    from ..cache import pin
 
+    Scale: the frontier state u3(node, used, nhp) carries the used
+    neighbour-color bitmask and the COUNT of still-uncolored
+    neighbours that beat the node. One aggregation over the edges into
+    each round's newly-colored winners maintains both, so a round is
+    one join + aggregation and one left-join merge: winner selection
+    is filter(nhp = 0) and winner removal filter(nhp > 0), with no
+    per-round restriction of the edge frame. Measured against a
+    used-mask-only loop that re-derived the beaten set per round:
+    165 k nodes 5.91 vs 6.50 s, 1.65 M nodes 12.47 vs 16.25 s,
+    bit-identical.
+
+    The state frame is registry-pinned each round while rounds <=
+    PURE_PIN_MAX_ROUNDS (repeat executions reuse every round's cache),
+    and localCheckpoint()ed each round above that, where the kept
+    ~2^rounds lineage would stall the analyzer.
+    """
     if rounds > 64:
-        # both arms pack used colors into ONE bigint bitmask
-        # (`1 << color`); round t can assign color t, so rounds > 64
-        # would shift past bit 63 and silently corrupt the mask
-        # (r12 verdict nit — same fail-loud style as the ckpt_every
-        # validation below)
+        # used colors are packed into ONE bigint bitmask (`1 << color`);
+        # round t can assign color t, so rounds > 64 would shift past
+        # bit 63 and silently corrupt the mask
         raise ValueError(
             f"rounds must be <= 64, got {rounds} — colors are packed "
             "into a single bigint used-mask (1 << color), so a 65th "
@@ -1895,207 +1801,60 @@ def greedy_coloring(edges: DataFrame, rounds: int = 3,
     u = (both.select(F.col(SRC).alias("node")).distinct()
          .withColumn("h", F.expr(pri)).transform(_pin))
     nodes = u.select("node")  # full node set, off the pinned frame
-    # `act` holds only edges whose BOTH endpoints are still uncolored,
-    # with each endpoint's md5 priority attached ONCE up front — rounds
-    # then decide winners from act alone (a filter + distinct, no
-    # re-join of the priority table), and act shrinks geometrically
-    # with the frontier. The full `both` is kept (persisted) solely for
-    # the used-color lookup against already-colored neighbours.
+    # `act` is the static edge frame with each endpoint's md5 priority
+    # attached ONCE up front, so no round re-joins the priority table
     ha = f"CAST(conv(substring(md5(concat('{prefix}', " \
          f"CAST({SRC} AS STRING))), 1, 15), 16, 10) AS BIGINT)"
     hb = f"CAST(conv(substring(md5(concat('{prefix}', " \
          f"CAST({DST} AS STRING))), 1, 15), 16, 10) AS BIGINT)"
     act = (both.withColumn("ha", F.expr(ha)).withColumn("hb", F.expr(hb))
            .transform(_pin))
-    if ckpt_every is None:
-        if fused == "counter":
-            # counter arm (r13): NO checkpoint round at the default
-            # rounds — the u3 state is only updated rounds-1 times and
-            # its plan references the pinned act/u, so kept lineage is
-            # bounded (2^rounds subtrees over InMemoryRelations) and a
-            # pure-persist loop lets repeat executions reuse every
-            # round's cache (the checkpointed form re-ran the whole
-            # loop per repetition). Cadences 1/2/3 measured within
-            # noise intra-run at rounds=3; cross-run reuse decides.
-            # Beyond PURE_PIN_MAX_ROUNDS the kept lineage (~2^rounds
-            # analyzed subtrees) would explode the analyzer, so the
-            # cadence falls back to per-round truncation there.
-            ckpt_every = (rounds + 1 if rounds <= PURE_PIN_MAX_ROUNDS
-                          else 1)
-        elif fused:
-            # fused arm checkpoints 2 frames/round (u2, act) vs
-            # legacy's 3 — colored is never re-joined, so it needs no
-            # truncation. Cadence 1 MEASURED fastest at both gate
-            # scales (165 k nodes: 6.26 vs 6.38 s cadence-3; 1.65 M:
-            # 15.36 vs 17.24 s), so no size gate and no count job.
-            ckpt_every = 1
-        else:
-            # legacy |V| size gate (docstring) — u is already eagerly
-            # checkpointed, so this count is a cached-frame scan; an
-            # EXPLICIT ckpt_every skips the count job entirely
-            ckpt_every = (1 if u.count() <= CKPT_PERSIST_MIN_NODES
-                          else min(rounds, 3))
-    elif ckpt_every < 1:
-        raise ValueError(
-            f"ckpt_every must be >= 1, got {ckpt_every} — 0 would "
-            "divide by zero mid-loop and a negative cadence silently "
-            "disables lineage truncation")
 
-    def trunc(df: DataFrame, t: int) -> DataFrame:
-        return (df.localCheckpoint() if (t + 1) % ckpt_every == 0
-                else pin(df))
+    def trunc(df: DataFrame) -> DataFrame:
+        return (_pin(df) if rounds <= PURE_PIN_MAX_ROUNDS
+                else df.localCheckpoint())
 
-    if fused == "counter":
-        # COUNTER arm (r12 verdict Next #3, the next fusion step):
-        # fold the beaten-selection itself into the per-round delta by
-        # maintaining, on the frontier state u3(node, used, nhp), the
-        # COUNT of still-active neighbours that beat this node
-        # (nhp = |{w adjacent, (h_w, w) < (h_u, u), w uncolored}|).
-        # Priorities are static, so nhp only ever DECREASES — by
-        # exactly one per beating neighbour at the moment that
-        # neighbour is colored — which is the same act-join-newly
-        # aggregation that maintains the used mask: one extra sum()
-        # riding the existing groupBy. Winner selection collapses to
-        # filter(nhp = 0) (winners are PRECISELY the nhp-0 rows, so
-        # winner removal is filter(nhp > 0) — no anti-join), and the
-        # per-round `act` restriction (two anti-joins + a checkpointed
-        # frame) disappears: `act` is consumed as a STATIC
-        # priority-annotated edge frame, checkpointed once. Per round:
-        # one broadcast-able join + aggregation, one left-join merge,
-        # ONE checkpointed frame. Bit-identical to the fused arm by
-        # construction (same winner predicate, same mask delta) and
-        # gated by tools/coloring_cadence.py.
-        beat = ((F.col("hb") < F.col("ha"))
-                | ((F.col("hb") == F.col("ha"))
-                   & (F.col(DST) < F.col(SRC))))
-        nhp0 = (act.filter(beat)
-                .groupBy(F.col(SRC).alias("node"))
-                .agg(F.count(F.lit(1)).alias("nhp")))
-        u3 = (u.select("node").join(nhp0, "node", "left")
-              .select("node", F.lit(0).cast("bigint").alias("used"),
-                      F.coalesce("nhp", F.lit(0)).alias("nhp")))
-        newlies = []
-        for t in range(rounds):
-            mex = "CASE " + " ".join(
-                f"WHEN (used >> {c}) % 2 = 0 THEN {c}"
-                for c in range(t + 1)) + f" ELSE {t} END"
-            newly = pin(u3.filter(F.col("nhp") == 0)
-                        .select("node", F.expr(mex).alias("color")))
-            newlies.append(newly)
-            if t + 1 < rounds:
-                delta = (act.join(newly.select(F.col("node").alias(DST),
-                                               "color"), DST)
-                         .groupBy(F.col(SRC).alias("node"))
-                         .agg(F.expr("bit_or(CAST(1 AS BIGINT) << color)")
-                              .alias("d"),
-                              F.sum(F.when(beat, 1).otherwise(0))
-                              .alias("dc")))
-                u3 = trunc(
-                    u3.filter(F.col("nhp") > 0)
-                    .join(delta, "node", "left")
-                    .select("node",
-                            F.expr("used | coalesce(d, CAST(0 AS BIGINT))")
-                            .alias("used"),
-                            F.expr("nhp - coalesce(dc, CAST(0 AS BIGINT))")
-                            .alias("nhp")), t)
-        colored = newlies[0]
-        for n in newlies[1:]:
-            colored = colored.union(n)
-        return (nodes.join(colored, "node", "left")
-                .select("node",
-                        F.coalesce("color", F.lit(-1)).alias("color")))
-
-    if fused:
-        # FUSED arm (r11 verdict Next #4): maintain the used-color
-        # bitmask INCREMENTALLY on the frontier state itself —
-        # u2(node, used) — so each round is (a) winner selection and
-        # mex in ONE pass over u2 (no separate win↔used join, no join
-        # against the GROWING colored set), and (b) a neighbour-mask
-        # delta aggregated from edges touching only the NEWLY-colored
-        # winners (shrinks geometrically; AQE broadcasts it, so `both`
-        # never shuffles), merged into u2 as the same left join that
-        # drops the winners. Frontier restriction of act is two
-        # anti-joins against the small winner set instead of two
-        # semi-joins against the big uncolored set. Total delta bytes
-        # over all rounds = O(|E|) once (each edge's winner side fires
-        # exactly once), vs the legacy path's O(K · |colored ⋈ both|)
-        # growing join. Bit-identical to the legacy arm by
-        # construction (same winners; mex over the same mask) and
-        # gated by tools/coloring_cadence.py.
-        u2 = u.select("node", F.lit(0).cast("bigint").alias("used"))
-        newlies: list[DataFrame] = []
-        for t in range(rounds):
-            beaten = (act.filter(
-                (F.col("hb") < F.col("ha"))
-                | ((F.col("hb") == F.col("ha"))
-                   & (F.col(DST) < F.col(SRC))))
-                .select(F.col(SRC).alias("node")).distinct())
-            mex = "CASE " + " ".join(
-                f"WHEN (used >> {c}) % 2 = 0 THEN {c}"
-                for c in range(t + 1)) + f" ELSE {t} END"
-            newly = pin(u2.join(beaten, "node", "left_anti")
-                        .select("node", F.expr(mex).alias("color")))
-            newlies.append(newly)
-            if t + 1 < rounds:
-                w = newly.select("node")
-                delta = (both.join(newly
-                                   .select(F.col("node").alias(DST),
-                                           "color"), DST)
-                         .groupBy(F.col(SRC).alias("node"))
-                         .agg(F.expr("bit_or(CAST(1 AS BIGINT) << color)")
-                              .alias("d")))
-                u2 = trunc(
-                    u2.join(w, "node", "left_anti")
-                    .join(delta, "node", "left")
-                    .select("node",
-                            F.expr("used | coalesce(d, CAST(0 AS BIGINT))")
-                            .alias("used")), t)
-                act = trunc(
-                    act.join(w.withColumnRenamed("node", SRC), SRC,
-                             "left_anti")
-                    .join(w.withColumnRenamed("node", DST), DST,
-                          "left_anti"), t)
-        colored = newlies[0]
-        for n in newlies[1:]:
-            colored = colored.union(n)
-        return (nodes.join(colored, "node", "left")
-                .select("node",
-                        F.coalesce("color", F.lit(-1)).alias("color")))
-
-    colored = None  # (node, color)
+    # nhp = |{w adjacent, (h_w, w) < (h_u, u), w uncolored}|. Priorities
+    # are static, so nhp only ever DECREASES — by exactly one per
+    # beating neighbour at the moment that neighbour is colored — which
+    # is the same act-join-newly aggregation that maintains the used
+    # mask: one extra sum() riding the existing groupBy.
+    beat = ((F.col("hb") < F.col("ha"))
+            | ((F.col("hb") == F.col("ha"))
+               & (F.col(DST) < F.col(SRC))))
+    nhp0 = (act.filter(beat)
+            .groupBy(F.col(SRC).alias("node"))
+            .agg(F.count(F.lit(1)).alias("nhp")))
+    u3 = (u.select("node").join(nhp0, "node", "left")
+          .select("node", F.lit(0).cast("bigint").alias("used"),
+                  F.coalesce("nhp", F.lit(0)).alias("nhp")))
+    newlies = []
     for t in range(rounds):
-        beaten = (act.filter(
-            (F.col("hb") < F.col("ha"))
-            | ((F.col("hb") == F.col("ha")) & (F.col(DST) < F.col(SRC))))
-            .select(F.col(SRC).alias("node")).distinct())
-        win = u.join(beaten, "node", "left_anti").select("node")
-        if colored is None:
-            newly = win.withColumn("color", F.lit(0))
-        else:
-            used = (both.join(win.withColumnRenamed("node", SRC), SRC)
-                    .join(colored.withColumnRenamed("node", DST), DST)
-                    .groupBy(F.col(SRC).alias("node"))
-                    .agg(F.expr("bit_or(CAST(1 AS BIGINT) << color)")
-                         .alias("used")))
-            mex = "CASE " + " ".join(
-                f"WHEN (used >> {c}) % 2 = 0 THEN {c}"
-                for c in range(t + 1)) + f" ELSE {t} END"
-            newly = (win.join(used, "node", "left")
-                     .select("node", F.expr(
-                         f"CASE WHEN used IS NULL THEN 0 "
-                         f"ELSE {mex} END").alias("color")))
-        # `colored` is checkpointed per round: lazy accumulation would
-        # re-evaluate every earlier leg inside each later round's
-        # used-color join (O(K²) leg re-evaluations — measured 6.2 s vs
-        # a 4.7 s floor at bench scale).
-        colored = newly if colored is None else colored.union(newly)
+        mex = "CASE " + " ".join(
+            f"WHEN (used >> {c}) % 2 = 0 THEN {c}"
+            for c in range(t + 1)) + f" ELSE {t} END"
+        newly = _pin(u3.filter(F.col("nhp") == 0)
+                     .select("node", F.expr(mex).alias("color")))
+        newlies.append(newly)
         if t + 1 < rounds:
-            colored = trunc(colored, t)
-            u = trunc(u.join(win, "node", "left_anti"), t)
-            act = trunc(act.join(u.select(F.col("node").alias(SRC)), SRC,
-                                 "left_semi")
-                        .join(u.select(F.col("node").alias(DST)), DST,
-                              "left_semi"), t)
+            delta = (act.join(newly.select(F.col("node").alias(DST),
+                                           "color"), DST)
+                     .groupBy(F.col(SRC).alias("node"))
+                     .agg(F.expr("bit_or(CAST(1 AS BIGINT) << color)")
+                          .alias("d"),
+                          F.sum(F.when(beat, 1).otherwise(0))
+                          .alias("dc")))
+            u3 = trunc(
+                u3.filter(F.col("nhp") > 0)
+                .join(delta, "node", "left")
+                .select("node",
+                        F.expr("used | coalesce(d, CAST(0 AS BIGINT))")
+                        .alias("used"),
+                        F.expr("nhp - coalesce(dc, CAST(0 AS BIGINT))")
+                        .alias("nhp")))
+    colored = newlies[0]
+    for n in newlies[1:]:
+        colored = colored.union(n)
     return (nodes.join(colored, "node", "left")
             .select("node", F.coalesce("color", F.lit(-1)).alias("color")))
 

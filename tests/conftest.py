@@ -32,6 +32,16 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _release_pinned():
+    """Drain the package persist registry after every test: the whole
+    suite shares one driver JVM, and frames the builders pinned in one
+    test would otherwise stay cached through every later one."""
+    yield
+    from nebula_storage_spark.cache import release_all
+    release_all()
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -1182,14 +1182,6 @@ def test_mis_independent_and_maximal_when_decided(spark):
     for v, s in got.items():
         if s == "out":
             assert adj[v] & chosen, v
-    # the r13 counter arm (measured negative, kept for A/B — see the
-    # docstring) must stay bit-identical to the shipping legacy arm
-    for rounds in (1, 3):
-        legacy = sorted(map(tuple, maximal_independent_set(
-            edges, rounds=rounds).collect()))
-        ctr = sorted(map(tuple, maximal_independent_set(
-            edges, rounds=rounds, counter=True).collect()))
-        assert legacy == ctr, rounds
 
 
 def test_prefix_sum_plan_is_range_partitioned_not_global(spark):
@@ -1294,20 +1286,25 @@ def test_bucketed_index_retrieval_prunes_partitions(spark, tmp_path):
     assert "_bucket" in plan.split("PartitionFilters", 1)[1][:200]
 
 
-def test_triangle_edge_support_counts_shared_edge(spark):
+@pytest.mark.parametrize("off", [0, -2, -10, 1 << 31, -(1 << 40)])
+def test_triangle_edge_support_counts_shared_edge(spark, off):
+    """Two triangles sharing edge (1,2): support((1,2)) = 2, others 1.
+    Every id is shifted by `off`: negative ids and ids of 2^31 or more
+    must skip the packed-BIGINT key — ids straddling zero unpack to
+    wrong (a, b) pairs (DIV and % truncate toward zero), and large
+    negative ids overflow the pack."""
     from nebula_storage_spark.operators.analytics import (
         triangle_counts, triangle_edge_support)
-    # two triangles sharing edge (1,2): support((1,2)) = 2, others 1;
-    # sum of supports == 3 * number of triangles
     edges = spark.createDataFrame(
-        [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3)],
+        [(a + off, b + off)
+         for a, b in [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3)]],
         "_src bigint, _dst bigint")
-    sup = {(r.a, r.b): r.support
+    sup = {(r.a - off, r.b - off): r.support
            for r in triangle_edge_support(edges).collect()}
     assert sup == {(0, 1): 1, (0, 2): 1, (1, 2): 2, (1, 3): 1, (2, 3): 1}
-    n_tri = sum(r.n_triangles
-                for r in triangle_counts(edges).collect()) // 3
-    assert sum(sup.values()) == 3 * n_tri
+    tri = {r.node - off: r.n_triangles
+           for r in triangle_counts(edges).collect()}
+    assert tri == {0: 1, 1: 2, 2: 2, 3: 1}
 
 
 def test_compact_small_files_reduces_files_preserves_rows(spark, tmp_path):
@@ -1834,61 +1831,51 @@ def test_bucketed_layout_lossy_cast_and_conf_guards(spark, tmp_path):
 
 
 def test_coloring_cadence_validation_and_no_count_when_explicit(spark):
-    """r11 ADVICE low + r11 verdict Next #6: ckpt_every/ckpt_cadence=0
-    would ZeroDivisionError mid-loop (negatives silently disable
-    truncation) — both now raise at entry; and an EXPLICIT ckpt_every
-    runs no auto-gate count() job (pinned by making count raise for
-    the duration of the build — on the CLASSIC DataFrame class, the
-    one instances actually resolve methods on in Spark 4; patching
-    the pyspark.sql.DataFrame base intercepts nothing)."""
-    import pytest
+    """greedy_coloring packs colors into ONE bigint bitmask (1 << color),
+    so rounds > 64 would silently wrap bit 63 — the entry guard must
+    fail loud. And building the default loop runs no eager count() job
+    (pinned by making count raise for the duration of the build — on
+    the CLASSIC DataFrame class, the one instances actually resolve
+    methods on in Spark 4; patching the pyspark.sql.DataFrame base
+    intercepts nothing)."""
     DataFrame = _classic_dataframe()
-    from nebula_storage_spark.operators.analytics import (
-        _min_label_fixpoint, greedy_coloring)
+    from nebula_storage_spark.operators.analytics import greedy_coloring
 
     e = spark.createDataFrame([(0, 1), (1, 2), (2, 3), (3, 0), (1, 4)],
                               "_src bigint, _dst bigint")
-    with pytest.raises(ValueError, match="ckpt_every"):
-        greedy_coloring(e, rounds=2, ckpt_every=0)
-    # r12 verdict nit: both arms pack colors into ONE bigint bitmask
-    # (1 << color) — rounds > 64 would silently wrap bit 63, so the
-    # entry guard must fail loud (and 64 itself must stay legal)
     with pytest.raises(ValueError, match="rounds must be <= 64"):
         greedy_coloring(e, rounds=65)
-    with pytest.raises(ValueError, match="rounds must be <= 64"):
-        greedy_coloring(e, rounds=65, fused=False)
-    nodes = spark.range(5).select(F.col("id").alias("node"))
-    with pytest.raises(ValueError, match="ckpt_cadence"):
-        _min_label_fixpoint(e, nodes, ckpt_cadence=0)
 
     real_count = DataFrame.count
 
     def boom(self):
-        raise AssertionError("auto-gate count() ran despite explicit "
-                             "ckpt_every")
+        raise AssertionError("greedy_coloring ran a count() job while "
+                             "building its loop")
     DataFrame.count = boom
     try:
-        colored = greedy_coloring(e, rounds=2, ckpt_every=1)
+        colored = greedy_coloring(e, rounds=2)
     finally:
         DataFrame.count = real_count
-    auto = {r.node: r.color
-            for r in greedy_coloring(e, rounds=2).collect()}
-    assert {r.node: r.color for r in colored.collect()} == auto
+    got = {r.node: r.color for r in colored.collect()}
+    assert set(got) == {0, 1, 2, 3, 4}
+    for a, b in [(0, 1), (1, 2), (2, 3), (3, 0), (1, 4)]:
+        assert -1 in (got[a], got[b]) or got[a] != got[b]
 
 
 def test_counter_arm_pure_pin_bounded_by_rounds(spark):
-    """r13: the counter arm keeps NO per-round checkpoint at the gated
-    small `rounds` (pure-pin — every round frame is plan-reusable, the
-    measured 2x bench win), but the kept lineage holds ~2^rounds
-    analyzed subtrees, so past PURE_PIN_MAX_ROUNDS the cadence must
-    fall back to per-round localCheckpoint truncation — and stay
-    bit-identical to the legacy arm at the same rounds."""
+    """The coloring loop keeps NO per-round checkpoint at small `rounds`
+    (pure-pin — every round frame is plan-reusable, the measured 2x
+    bench win), but the kept lineage holds ~2^rounds analyzed
+    subtrees, so past PURE_PIN_MAX_ROUNDS the loop must fall back to
+    per-round localCheckpoint truncation — and still match the DuckDB
+    oracle at the same rounds."""
+    import duckdb
     DataFrame = _classic_dataframe()
     from nebula_storage_spark.operators.analytics import (
-        PURE_PIN_MAX_ROUNDS, greedy_coloring)
+        PURE_PIN_MAX_ROUNDS, coloring_oracle_sql, greedy_coloring)
 
-    e = spark.createDataFrame([(0, 1), (1, 2), (2, 3), (3, 0), (1, 4)],
-                              "_src bigint, _dst bigint")
+    pairs = [(0, 1), (1, 2), (2, 3), (3, 0), (1, 4)]
+    e = spark.createDataFrame(pairs, "_src bigint, _dst bigint")
     calls = []
     real_lc = DataFrame.localCheckpoint
 
@@ -1898,7 +1885,7 @@ def test_counter_arm_pure_pin_bounded_by_rounds(spark):
 
     DataFrame.localCheckpoint = counting_lc
     try:
-        greedy_coloring(e, rounds=3)          # counter default: pure pin
+        greedy_coloring(e, rounds=3)          # default: pure pin
         pure_pin_calls = len(calls)
         calls.clear()
         deep = greedy_coloring(e, rounds=PURE_PIN_MAX_ROUNDS + 1)
@@ -1909,10 +1896,15 @@ def test_counter_arm_pure_pin_bounded_by_rounds(spark):
     # the state frame is updated rounds-1 times, each one truncated
     assert fallback_calls == PURE_PIN_MAX_ROUNDS
     got = {r.node: r.color for r in deep.collect()}
-    legacy = {r.node: r.color
-              for r in greedy_coloring(e, rounds=PURE_PIN_MAX_ROUNDS + 1,
-                                       fused=False).collect()}
-    assert got == legacy
+    values = ", ".join(f"({a}, {b})" for a, b in pairs)
+    con = duckdb.connect()
+    try:
+        want = dict(con.execute(coloring_oracle_sql(
+            f"SELECT * FROM (VALUES {values}) t(src, dst)",
+            rounds=PURE_PIN_MAX_ROUNDS + 1)).fetchall())
+    finally:
+        con.close()
+    assert got == want
 
 
 def test_kernel_assignment_plans_are_pure_maps(spark, sf_dir):
